@@ -6,22 +6,29 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.spark.Page
 import graft.extract.{Extractor, Py}
+import graft.io.MissingInput
 
 /** The reference corpus as a `pages` table (test fixture): 145 rows from
   * `/root/reference/data/html/NNN.html` + `urls.txt` (line N ↔ doc N).
   * warc_ts is deterministic from the doc id; text is left null (the
-  * engine recomputes extraction from html).
+  * engine recomputes extraction from html). An absent fixture raises
+  * [[graft.io.MissingInputException]] naming the missing path; it never
+  * yields an empty corpus.
   */
 object RefCorpus {
   val RefData = "/root/reference/data"
 
-  def docIds: Seq[Int] = (1 to 145).filter { id =>
-    Files.exists(Paths.get(f"$RefData/html/$id%03d.html"))
+  def docIds: Seq[Int] = {
+    MissingInput.requireLocal(s"$RefData/html")
+    (1 to 145).filter { id =>
+      Files.exists(Paths.get(f"$RefData/html/$id%03d.html"))
+    }
   }
 
   lazy val urls: Map[Int, String] = {
     val lines = new String(
-      Files.readAllBytes(Paths.get(s"$RefData/urls.txt")),
+      Files.readAllBytes(Paths.get(
+        MissingInput.requireLocal(s"$RefData/urls.txt"))),
       StandardCharsets.UTF_8).split("\n", -1)
     lines.zipWithIndex.collect {
       case (u, i) if u.trim.nonEmpty => (i + 1) -> u.trim
@@ -37,7 +44,8 @@ object RefCorpus {
     new Timestamp(1546300800000L + id * 3600L * 1000L) // 2019-01-01 + id hours
 
   def readHtmlBytes(id: Int): Array[Byte] =
-    Files.readAllBytes(Paths.get(f"$RefData/html/$id%03d.html"))
+    Files.readAllBytes(Paths.get(
+      MissingInput.requireLocal(f"$RefData/html/$id%03d.html")))
 
   /** Target names for one doc, reference CLI tokenization. */
   def targetNames(id: Int): Seq[String] = {

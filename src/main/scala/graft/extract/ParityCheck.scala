@@ -4,8 +4,11 @@ import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 import graft.dom.Bs4Config
+import graft.io.MissingInput.requireLocal
 
-/** Golden-file access for the reference corpus (dev/test harness only). */
+/** Golden-file access for the reference corpus (dev/test harness only).
+  * A missing fixture file raises [[graft.io.MissingInputException]].
+  */
 object GoldenData {
   val RefDir = "/root/reference/data"
 
@@ -15,7 +18,7 @@ object GoldenData {
     * (sentences separated by "", like the file).
     */
   def parseSplit(path: String): Vector[GoldenDoc] = {
-    val content = new String(Files.readAllBytes(Paths.get(path)),
+    val content = new String(Files.readAllBytes(Paths.get(requireLocal(path))),
       StandardCharsets.UTF_8)
     graft.io.ConllCodec.parseDocs(content).map { case (id, url, sents) =>
       val lines = sents.iterator.zipWithIndex.flatMap { case (sent, i) =>
@@ -27,7 +30,7 @@ object GoldenData {
   }
 
   def readHtml(id: Int): String = {
-    val p = Paths.get(f"$RefDir/html/$id%03d.html")
+    val p = Paths.get(requireLocal(f"$RefDir/html/$id%03d.html"))
     Py.universalNewlines(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
   }
 
@@ -75,7 +78,8 @@ object GoldenData {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val raw = new String(
-      Files.readAllBytes(Paths.get("/root/reference/RNE Dataset.ipynb")),
+      Files.readAllBytes(Paths.get(
+        requireLocal("/root/reference/RNE Dataset.ipynb"))),
       StandardCharsets.UTF_8)
     val cells = (JsonMethods.parse(raw) \ "cells").asInstanceOf[JArray].arr
     val outputs = (cells(2) \ "outputs").asInstanceOf[JArray].arr

@@ -44,11 +44,15 @@ object ConllCodec {
   }
 
   /** Read reference-format CoNLL into SentenceRows (distributed at file
-    * granularity). Token line: tkn tag f0..f12 (15 cols).
+    * granularity). Token line: tkn tag f0..f12 (15 cols). A missing
+    * `path` raises [[MissingInputException]] here, not at the first
+    * action on the lazy scan.
     */
   def read(spark: SparkSession, path: String): Dataset[SentenceRow] = {
     import spark.implicits._
-    spark.sparkContext.wholeTextFiles(path).flatMap { case (_, content) =>
+    val files = spark.sparkContext.wholeTextFiles(
+      MissingInput.requireHadoop(spark, path))
+    files.flatMap { case (_, content) =>
       parseDocs(content).iterator.flatMap { case (id, url, sents) =>
         sents.iterator.zipWithIndex.map { case (s, si) =>
           SentenceRow(

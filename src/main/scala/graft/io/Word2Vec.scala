@@ -69,17 +69,15 @@ object Word2Vec {
         "word2vec binary: malformed '<count> <dim>' header"))
     new Iterator[(String, Array[Float])] {
       private var emitted = 0L
-      def hasNext: Boolean = {
+      def hasNext: Boolean = emitted < nWords
+      def next(): (String, Array[Float]) = {
         // a shard truncated exactly at a record boundary (or a header
         // overstating the count) exhausts the bytes with emitted <
         // nWords — that is the same silent-tail-drop this parser
         // promises to refuse, so it raises like mid-record truncation
-        require(emitted == nWords || off < bytes.length,
+        require(off < bytes.length,
           s"word2vec binary: header declared $nWords words, " +
             s"shard ended after $emitted")
-        emitted < nWords
-      }
-      def next(): (String, Array[Float]) = {
         val start = off
         while (off < bytes.length && bytes(off) != ' ') off += 1
         require(off < bytes.length,

@@ -25,7 +25,7 @@ object Canonicalize {
     */
   def nameId(name: String): Long = graft.functions.Fnv1a64.hashString(name)
 
-  private val nameIdUdf = udf((s: String) => nameId(s))
+  private[kg] val nameIdUdf = udf((s: String) => nameId(s))
 
   /** Connected components over (name_a, name_b) pairs; returns
     * (name, component) for every name that appears in a link.

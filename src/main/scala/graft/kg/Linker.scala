@@ -1,20 +1,22 @@
 package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.extract.Extractor
+import graft.ops.Dedup
 
 /** Entity-linking candidate generation (SURVEY §2.3 J4, north star:
   * "MinHash-LSH blocking + broadcast alias-dictionary scoring").
   *
   * Names are normalized with the reference accent-folding, shingled into
-  * character 3-grams, MinHash-bucketed, and candidate pairs come from the
-  * LSH `approxSimilarityJoin` — a bounded shuffle keyed by band hashes
-  * (never the full cross product). A broadcast alias dictionary links
-  * known aliases directly (hash semi-join against a broadcast map — no
-  * shuffle at all for the dictionary path).
+  * character 3-grams, and linked on the engine's one MinHash LSH,
+  * [[graft.ops.Dedup.minhashLshPairs]]: native `minhash_sig` band keys,
+  * bounded in-bucket pairing (a hot band bucket chain-pairs instead of
+  * going quadratic) and an exact Jaccard verify — a shuffle keyed by band
+  * hashes, never the full cross product. A broadcast alias dictionary
+  * links known aliases directly (hash semi-join against a broadcast map —
+  * no shuffle at all for the dictionary path).
   */
 object Linker {
 
@@ -36,33 +38,37 @@ object Linker {
       .agg(count(lit(1)).as("support"))
 
   private val normUdf = udf((s: String) => normalize(s))
-  private val shinglesUdf = udf((s: String) => shingles(s))
 
-  /** LSH candidate pairs (nameA < nameB) with Jaccard distance below
-    * `maxDistance`. numHashTables trades recall vs shuffle width.
+  /** Stands in for the space inside a gram, so that a name's grams joined
+    * by spaces form one MinHash document whose words are exactly those
+    * grams. No normal form contains it: `Py.lower` maps every ASCII
+    * capital and the accent table emits only lowercase ASCII, so a padded
+    * gram like " jo" can never collide with a literal name character.
+    */
+  private val GramSpace = 'S'
+
+  private val gramDocUdf = udf((name: String) =>
+    shingles(normalize(name)).map(_.replace(' ', GramSpace)).mkString(" "))
+
+  /** LSH candidate pairs (nameA < nameB) whose char-3-gram Jaccard
+    * distance is strictly below `maxDistance`. Five one-row bands
+    * (`w = 1`: each gram is one MinHash word); names sharing a normal
+    * form have identical gram sets, so they pair at distance 0 in every
+    * bucket, hot buckets included (exact-copy runs plus the chain).
     */
   def candidatePairs(spark: SparkSession, names: DataFrame,
-      maxDistance: Double = 0.5, numHashTables: Int = 5,
-      numFeatures: Int = 1 << 18): DataFrame = {
-    val prepared = names
-      .withColumn("norm", normUdf(col("name")))
-      .withColumn("grams", shinglesUdf(col("norm")))
-      .filter(size(col("grams")) > 0)
-
-    val tf = new HashingTF().setInputCol("grams").setOutputCol("features")
-      .setNumFeatures(numFeatures).setBinary(true)
-    val feat = tf.transform(prepared)
-
-    val lsh = new MinHashLSH().setInputCol("features").setOutputCol("hashes")
-      .setNumHashTables(numHashTables).setSeed(42)
-    val model = lsh.fit(feat)
-
-    model.approxSimilarityJoin(feat, feat, maxDistance, "dist")
-      .filter(col("datasetA.name") < col("datasetB.name"))
-      .select(
-        col("datasetA.name").as("name_a"),
-        col("datasetB.name").as("name_b"),
-        col("dist"))
+      maxDistance: Double = 0.5): DataFrame = {
+    val docs = names.select(Canonicalize.nameIdUdf(col("name")).as("id"),
+      col("name"), gramDocUdf(col("name")).as("grams"))
+    val byId = docs.select("id", "name")
+    Dedup.minhashLshPairs(spark, docs, textCol = "grams", idCol = "id",
+        w = 1, bands = 5, rows = 1, minJaccard = 1 - maxDistance)
+      .withColumn("dist", lit(1.0) - col("jaccard"))
+      .filter(col("dist") < maxDistance)
+      .join(byId.toDF("id_a", "a"), "id_a")
+      .join(byId.toDF("id_b", "b"), "id_b")
+      .select(least(col("a"), col("b")).as("name_a"),
+        greatest(col("a"), col("b")).as("name_b"), col("dist"))
   }
 
   /** Direct links via a broadcast alias dictionary: alias-normal-form ->

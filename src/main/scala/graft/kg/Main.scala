@@ -8,8 +8,10 @@ import graft.tag.Hmm
 
 /** spark-submit entry for the full KG-construction pipeline (north rule):
   *
-  *   pages -> extract -> mentions -> triples -> link (LSH + alias dict)
+  *   pages -> extract -> mentions -> triples
+  *         -> link (char-3-gram MinHash LSH over the name vocabulary)
   *         -> canonicalize (CC) -> materialize nodes/edges (+ lineage)
+  *         -> entity_rank (PageRank)
   *
   * Every stage is checkpoint-resumable (see [[Stages]]). Usage:
   *
@@ -155,11 +157,12 @@ object Main {
         tagConfidence).toDF()
     }
 
+    // one MinHash-LSH pass over the name vocabulary; it also links every
+    // pair sharing a normal form (identical gram sets, distance 0)
     val links = stages.stage("links", stages.outputRowsOf("triples")) {
-      val vocab = Linker.nameVocab(spark, triples.as[graft.spark.Triple])
-      val lsh = Linker.candidatePairs(spark, vocab, maxDistance = 0.3)
-      val exact = Linker.exactNormLinks(spark, vocab)
-      lsh.unionByName(exact).dropDuplicates("name_a", "name_b")
+      Linker.candidatePairs(spark,
+        Linker.nameVocab(spark, triples.as[graft.spark.Triple]),
+        maxDistance = 0.3)
     }
 
     val nodes = stages.stage("nodes", stages.outputRowsOf("links")) {

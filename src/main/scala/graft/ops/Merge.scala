@@ -62,7 +62,9 @@ object Merge {
       // raise_error guard and duplicate delta keys would silently fan
       // out. Keep the guard alive in a WHERE instead — base-only rows
       // carry a NULL flag and pass; delta rows evaluate the guard
-      // (true, or the raise). Semantically a no-op filter.
+      // (true, or the raise). Semantically a no-op filter. MergeRankingSpec
+      // ("all-key schema keeps the duplicate guard alive") pins this
+      // optimizer behaviour: it fails if the guard is ever pruned again.
       joined.filter(coalesce(col("__in_delta"), lit(true)))
         .select(key.map(col): _*)
     else

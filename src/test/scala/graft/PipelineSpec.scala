@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RefCorpus
 import graft.dom.Bs4Config
-import graft.io.ConllCodec
+import graft.io.{ConllCodec, MissingInput}
 import graft.kg.Triples
 import graft.metrics.SpanMetrics
 import graft.spark.ExtractStage
@@ -46,14 +46,19 @@ class PipelineSpec extends AnyFunSuite {
     bs4 = Bs4Config(popUnmatchedToRoot = true, classWhitespaceSplit = true,
       convertCharrefs = false))
 
+  /** A reference fixture file's text; a missing file raises the named
+    * MissingInputException.
+    */
+  def readFixture(path: String): String = new String(
+    java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(MissingInput.requireLocal(path))),
+    java.nio.charset.StandardCharsets.UTF_8)
+
   /** Gold triples derived from the reference's own emitted data: every
     * labeled span in data/test -> (url, mentionsPerson, name).
     */
   def goldTriplesFromFile(path: String): Set[(String, String, String)] = {
-    val content = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    ConllCodec.parseDocs(content).flatMap { case (_, url, sents) =>
+    ConllCodec.parseDocs(readFixture(path)).flatMap { case (_, url, sents) =>
       sents.flatMap { s =>
         val tags = s.map(_(1))
         val tkns = s.map(_(0))
@@ -66,10 +71,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("triples gate: pipeline P/R >= 0.95 vs reference test corpus") {
     import spark.implicits._
-    val testIds = ConllCodec.parseDocs(new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"${RefCorpus.RefData}/test")),
-      java.nio.charset.StandardCharsets.UTF_8)).map(_._1)
+    val testIds = ConllCodec.parseDocs(
+      readFixture(s"${RefCorpus.RefData}/test")).map(_._1)
 
     val pages = RefCorpus.pages(spark, testIds)
     val names = spark.sparkContext.broadcast(RefCorpus.targetNameMap(testIds))
@@ -90,21 +93,26 @@ class PipelineSpec extends AnyFunSuite {
 
   test("HMM fit on valid, self-train + decode test: span F1 in range") {
     import spark.implicits._
-    val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid").cache()
-    val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test").cache()
+    val train = ConllCodec.read(spark, s"${RefCorpus.RefData}/valid")
+    val test = ConllCodec.read(spark, s"${RefCorpus.RefData}/test")
+    // a failure must not leave cached reads behind in the shared session
+    try {
+      train.cache(); test.cache()
+      val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
+      val m1 = Hmm.selfTrain(spark, m0, test)
 
-    val m0 = Hmm.fit(spark, train, timeSteps = 1, useFeatures = true)
-    val m1 = Hmm.selfTrain(spark, m0, test)
-
-    val pairs = Hmm.predict(spark, m1, test).map { case (s, pred) =>
-      (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
+      val pairs = Hmm.predict(spark, m1, test).map { case (s, pred) =>
+        (pred.map(Hmm.Labels(_)): Seq[String], s.bio)
+      }
+      val res = SpanMetrics.evaluate(spark, pairs)
+      info(f"HMM-1+feat+ST (fit on valid): P=${res.precision}%.4f " +
+        f"R=${res.recall}%.4f F1=${res.f1}%.4f acc=${res.accuracy}%.4f")
+      // published reference: 0.866 trained on data/train (missing blob);
+      // fit on the smaller valid split must still land in a sane band
+      assert(res.f1 > 0.55 && res.f1 <= 1.0, f"F1 ${res.f1}%.4f out of range")
+    } finally {
+      train.unpersist(); test.unpersist()
     }
-    val res = SpanMetrics.evaluate(spark, pairs)
-    info(f"HMM-1+feat+ST (fit on valid): P=${res.precision}%.4f " +
-      f"R=${res.recall}%.4f F1=${res.f1}%.4f acc=${res.accuracy}%.4f")
-    // published reference: 0.866 trained on data/train (missing blob);
-    // fit on the smaller valid split must still land in a sane band
-    assert(res.f1 > 0.55 && res.f1 <= 1.0, f"F1 ${res.f1}%.4f out of range")
   }
 
   test("span metrics agree with conlleval-style counts on a fixture") {

@@ -78,8 +78,7 @@ class Word2VecSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("shard ended after 1"), e.getMessage)
     // header overstating the word count is the same corruption class
-    val overstated = bytes.clone()
-    overstated(0) = '9'.toByte // "3 3\n" -> "9 3\n"
+    val overstated = "9 3\n".getBytes ++ bytes.drop(headerEnd)
     val e2 = intercept[IllegalArgumentException] {
       Word2Vec.parseBinary(overstated).toSeq
     }

@@ -31,6 +31,80 @@ class LinkSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1.contains("Garcia") && p._2.contains("Smith")))
   }
 
+  /** Brute-force char-3-gram Jaccard distance between two names. */
+  def gramDistance(a: String, b: String): Double = {
+    val ga = Linker.shingles(Linker.normalize(a)).toSet
+    val gb = Linker.shingles(Linker.normalize(b)).toSet
+    1.0 - ga.intersect(gb).size.toDouble / ga.union(gb).size.toDouble
+  }
+
+  test("LSH pairs carry the exact gram distance; same-normal-form pairs all present") {
+    // seeded planted variants: case/accent/padding spellings share a
+    // normal form, typos and dropped letters are near but distinct
+    val rng = new scala.util.Random(17)
+    val firsts = Seq("jose", "maria", "john", "wei", "anna", "pierre",
+      "olga", "ahmed", "lucia", "kenji", "ines", "tomas")
+    val lasts = Seq("garcia", "smith", "zhang", "mueller", "rossi",
+      "dubois", "ivanova", "tanaka", "silva", "novak", "kowalski",
+      "hernandez", "andersen", "okafor", "lindqvist")
+    val accents = Map('a' -> 'á', 'e' -> 'é', 'i' -> 'í', 'o' -> 'ö', 'u' -> 'ü')
+    val bases = rng.shuffle(for (f <- firsts; l <- lasts) yield s"$f $l").take(60)
+    def typo(s: String): String = {
+      val i = 1 + rng.nextInt(s.length - 2)
+      s.updated(i, if (s(i) == 'x') 'q' else 'x')
+    }
+    val vocab = bases.flatMap { b =>
+      val title = b.split(" ").map(_.capitalize).mkString(" ")
+      Seq(title, b, b.toUpperCase, s" $title ", b.map(c => accents.getOrElse(c, c)),
+        typo(title), title.patch(1 + rng.nextInt(title.length - 2), "", 1))
+    }.distinct
+    assert(vocab.length > 300)
+    val maxDistance = 0.3
+    val got = Linker.candidatePairs(spark,
+        namesDf(vocab.map(n => (n, 1L)): _*), maxDistance)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+    got.foreach { case (a, b, d) =>
+      assert(a < b, s"unordered pair ($a, $b)")
+      assert(d == gramDistance(a, b), s"($a, $b): dist $d")
+      assert(d < maxDistance, s"($a, $b): dist $d not below $maxDistance")
+    }
+    val pairs = got.map(p => (p._1, p._2)).toSet
+    assert(pairs.size == got.length, "duplicate pair rows")
+    val all = for (a <- vocab; b <- vocab if a < b) yield (a, b)
+    val sameNorm = all.filter { case (a, b) =>
+      Linker.normalize(a) == Linker.normalize(b) }
+    assert(sameNorm.nonEmpty)
+    sameNorm.foreach(p => assert(pairs.contains(p), s"missing same-norm pair $p"))
+    // five one-row bands: a pair at J >= 0.7 is missed with p <= 0.3^5
+    val near = all.filter { case (a, b) => gramDistance(a, b) < maxDistance }
+    val recall = near.count(pairs.contains).toDouble / near.length
+    assert(recall >= 0.95, f"LSH recall $recall%.3f vs brute force")
+  }
+
+  test("hot normal form: 2^11 case spellings stay bounded and one component") {
+    // every upper/lower-case spelling of an 11-letter name: 2,048 names
+    // with one gram set, so every band bucket holds all of them, above
+    // minhashLshPairs' maxBucket = 1000. The bounded pairing chains them
+    // (at most n x hotChain rows, hotChain = 20) instead of emitting
+    // all ~2.1M pairs, and the chain still connects the whole bucket.
+    val base = "mariagarcia"
+    val names = (0 until (1 << base.length)).map { mask =>
+      base.zipWithIndex.map { case (c, i) =>
+        if ((mask >> i & 1) == 1) c.toUpper else c }.mkString
+    }
+    val n = names.length
+    val links = Linker.candidatePairs(spark,
+      namesDf(names.map(x => (x, 1L)): _*), maxDistance = 0.3).cache()
+    try {
+      val rows = links.count()
+      assert(rows <= n * 20L, s"$rows link rows for $n names")
+      assert(links.filter(col("dist") =!= 0.0).isEmpty)
+      val membership = Canonicalize.components(spark, links).collect()
+      assert(membership.length == n, "every spelling is linked")
+      assert(membership.map(_.getLong(1)).distinct.length == 1, "one component")
+    } finally links.unpersist()
+  }
+
   test("connected components + canonical election merge variant clusters") {
     val names = namesDf(
       ("Jose Garcia", 10L), ("José García", 3L), ("Garcia, Jose", 1L),
