@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.DecimalType
   * token co-occurrence graph from [[GraphOps.bigramEdges]] (the
   * TextRank shape, Mihalcea & Tarau 2004), or any edge table.
   *
-  * Determinism contract (the same one `SparkEntry.dsum` uses): every
+  * Determinism contract (the same one `QQueries.dsum` uses): every
   * floating-point SUM in [[pagerank]] runs through exact DECIMAL
   * aggregation, so partial-aggregation order — which changes with
   * partition count — cannot change the result. PageRank here is

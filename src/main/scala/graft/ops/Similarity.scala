@@ -624,8 +624,8 @@ object Similarity {
     * controls the quadratic term exactly as in [[ivfSelfTopK]], AQE
     * splits an oversized cell, and `metrics` observes the candidate
     * count as the raise-nlist signal. Keeper election reuses the
-    * checkpointed GraphX CC core, whose output is proportional to the
-    * DUPLICATED subset only.
+    * checkpointed [[graft.spark.Cc]] core, whose output is
+    * proportional to the DUPLICATED subset only.
     *
     * Approximation contract (same honesty as the ANN surfaces): a
     * cross-CLUSTER near-duplicate pair is not examined — that is

@@ -104,7 +104,6 @@ object Cc {
         .union(smin.select(col("m").as("u"), col("x").as("v")))
         .distinct()
     }
-    val debug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
     var converged = e.isEmpty
     var round = 0
     // BATCHED rounds: two alternating rounds compose lazily into one
@@ -124,7 +123,6 @@ object Cc {
     // 30-50x. The eager localCheckpoint gives each round an opaque,
     // flat base; its extra job is small and scale-safe.
     while (!converged && round < maxIter) {
-      val tRound = System.nanoTime()
       val ss = smallStar(largeStar(e)).localCheckpoint(true)
       // Fixpoint test: `ss` is converged exactly when it is a STAR
       // FOREST — (a) no vertex appears on both the root (u) and member
@@ -145,9 +143,6 @@ object Cc {
       converged = dupV.unionByName(rootAsMember).isEmpty
       e = ss
       round += 1
-      if (debug) System.err.println(
-        f"[cc] round $round ${(System.nanoTime() - tRound) / 1e9}%.3f s " +
-          s"converged=$converged")
     }
     // At the fixpoint `e` is a star forest: (root=u, member=v) with
     // u the component min. Unconverged components are part-collapsed

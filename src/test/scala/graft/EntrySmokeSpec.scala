@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (PipelineSpec); this pins the exact entry-point wiring the driver
   * calls.
   */
-class EntrySmokeSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class EntrySmokeSpec extends AnyFunSuite with SharedSpark {
 
   test("entry() yields triples on the reference corpus") {
     val df = SparkEntry.entry(spark)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.RefCorpus
 import graft.dom.Bs4Config
@@ -10,37 +9,11 @@ import graft.metrics.SpanMetrics
 import graft.spark.ExtractStage
 import graft.tag.Hmm
 
-object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Recursive temp-dir cleanup shared by the specs (was copy-pasted
-    * nine times across the kg/io suites). Null-safe on vanished dirs.
-    */
-  def deleteRec(p: java.io.File): Unit = {
-    if (p.isDirectory) {
-      val fs = p.listFiles
-      if (fs != null) fs.foreach(deleteRec)
-    }
-    p.delete()
-  }
-}
-
 /** End-to-end Spark pipeline against the reference corpus: the triples
   * acceptance gate (BASELINE.md: (subj,pred,obj) P/R >= 0.95 vs the
   * reference-derived gold set) and the HMM fit/decode path.
   */
-class PipelineSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class PipelineSpec extends AnyFunSuite with SharedSpark {
 
   val GoldenCfg = ExtractStage.Config(
     bs4 = Bs4Config(popUnmatchedToRoot = true, classWhitespaceSplit = true,

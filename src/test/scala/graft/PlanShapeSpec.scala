@@ -12,8 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rather than surfacing as an unexplained bench regression at 100x
   * the data.
   */
-class PlanShapeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+class PlanShapeSpec extends AnyFunSuite with SharedSpark {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def planOf(name: String): String =
@@ -44,6 +43,15 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), s"expected BHJ:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"tiny dim side must never sort-merge:\n$plan")
+  }
+
+  test("q3_window_topk: the top-3 cut runs as a WindowGroupLimit") {
+    // `rk <= 3` over row_number() lets Catalyst cap every supplier at
+    // 3 rows before the exchange (Partial) and again after it (Final),
+    // so the Window sorts at most 3 rows per key instead of them all
+    val plan = planOf("q3_window_topk")
+    assert(plan.contains("WindowGroupLimit"),
+      s"top-k filter no longer pushed below the window:\n$plan")
   }
 
   test("column-only kernels: codegen spans present, no UDF or python eval") {

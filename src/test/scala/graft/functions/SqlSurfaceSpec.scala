@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** The SQL surface: extract_tokens as a LATERAL VIEW generator must
   * reproduce the kernel's token stream from plain SQL.
   */
-class SqlSurfaceSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class SqlSurfaceSpec extends AnyFunSuite with SharedSpark {
 
   test("extract_tokens generator matches the kernel over SQL") {
     import spark.implicits._

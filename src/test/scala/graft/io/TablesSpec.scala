@@ -1,15 +1,14 @@
 package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Table-access seam: the same `Tables.table(spark, loc, name)` call
   * resolves parquet directories and catalog namespaces — the production
   * Iceberg path (`catalog:ice.db`) differs only in the configured
   * catalog implementation, not in engine code.
   */
-class TablesSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class TablesSpec extends AnyFunSuite with SharedSpark {
 
   test("parquet dir and catalog namespace resolve through the same seam") {
     val sf = "/root/testdata/sf0.001"

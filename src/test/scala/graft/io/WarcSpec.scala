@@ -1,14 +1,13 @@
 package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** WARC source: record framing, header parsing, HTTP head stripping,
   * response filtering, gzip member streams, and the pages projection
   * feeding the extraction kernel end-to-end.
   */
-class WarcSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class WarcSpec extends AnyFunSuite with SharedSpark {
 
   private def record(tpe: String, uri: String, date: String,
       payload: Array[Byte]): Array[Byte] = {

@@ -1,14 +1,13 @@
 package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** word2vec importer: binary codec round-trip, header semantics on the
   * text path, vocab filtering, truncation fail-fast, and matrix
   * alignment parity with the GloVe loader.
   */
-class Word2VecSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class Word2VecSpec extends AnyFunSuite with SharedSpark {
 
   private val rows = Seq(
     ("alpha", Array(1.0f, -2.5f, 3.25f)),

@@ -2,7 +2,7 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Graph analytics over KG edge tables: bigram edge derivation, degree
   * accounting, PageRank against a hand-computed fixed point, BFS
@@ -10,8 +10,7 @@ import graft.TestSpark
   * the decimal-sum contract buys — bit-identical PageRank across
   * partition counts.
   */
-class GraphOpsSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class GraphOpsSpec extends AnyFunSuite with SharedSpark {
 
   def docs(texts: String*) = {
     import spark.implicits._

@@ -2,14 +2,13 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Entity linking + canonicalization: LSH blocking recall/precision on
   * crafted variants, salted hot-entity aggregation, alias-dictionary
   * scoring, and checkpoint resume (FIXTURES.md §8).
   */
-class LinkSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class LinkSpec extends AnyFunSuite with SharedSpark {
 
   def namesDf(names: (String, Long)*) = {
     import spark.implicits._

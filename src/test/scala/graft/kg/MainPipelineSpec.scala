@@ -2,15 +2,14 @@ package graft.kg
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Full-pipeline plumbing: the pages source is consumed exactly ONCE
   * (lineage input_rows comes from an accumulator inside the extract job,
   * not a second pages.count() pass — at 100 TB an extra generation/scan
   * pass per run is a full corpus read).
   */
-class MainPipelineSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class MainPipelineSpec extends AnyFunSuite with SharedSpark {
 
   test("pages are generated in one pass; lineage still records input_rows") {
     import spark.implicits._

@@ -2,14 +2,13 @@ package graft.kg
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.spark.{ExtractStage, Page}
 
 /** Surface-pattern relation extraction over crafted faculty pages:
   * honorific-prefix -> hasTitle, nearest-mention email -> hasEmail.
   */
-class RelationsSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class RelationsSpec extends AnyFunSuite with SharedSpark {
 
   private def page(url: String, html: String): Page =
     Page(url, new Timestamp(0L), html.getBytes("UTF-8"), "", "en")

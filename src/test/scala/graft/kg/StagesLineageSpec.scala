@@ -2,7 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Lineage schema evolution: a resumed outDir written before the
   * `skipped_rows` column mixes 5- and 6-column parquet files in
@@ -10,8 +10,7 @@ import graft.TestSpark
   * `spark.read.parquet` samples ONE footer for the schema) and
   * null-fill old rows with 0.
   */
-class StagesLineageSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class StagesLineageSpec extends AnyFunSuite with SharedSpark {
 
   test("lineage() merges pre-skipped_rows files with current-format appends") {
     import spark.implicits._

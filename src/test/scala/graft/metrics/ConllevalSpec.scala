@@ -2,7 +2,7 @@ package graft.metrics
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.corpus.RefCorpus
 import graft.io.ConllCodec
 import graft.tag.Hmm
@@ -10,8 +10,7 @@ import graft.tag.Hmm
 /** A7: our span metric must agree with the official CoNLL Perl scorer
   * (`/root/reference/conlleval`) on real predictions.
   */
-class ConllevalSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class ConllevalSpec extends AnyFunSuite with SharedSpark {
 
   val conlleval = Paths.get("/root/reference/conlleval")
 

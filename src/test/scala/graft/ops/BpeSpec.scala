@@ -13,11 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `doc_bpe_real` oracle builds on (enough merges collapse every
   * training word to one token; fully-OOV words fall back to chars).
   */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with graft.SharedSpark {
 
   // the SHARED test session (never stopped here — getOrCreate would
   // alias it, and stopping would kill every later suite in the JVM)
-  private lazy val spark = graft.TestSpark.spark
 
   private def sennrichDocs = {
     import spark.implicits._

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class CorpusStatsSpec extends AnyFunSuite {
-  private lazy val spark = graft.TestSpark.spark
+class CorpusStatsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("exact quantiles match the sequential interpolation definition") {
     import spark.implicits._

@@ -2,15 +2,14 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Round-6 pipeline operators: MERGE-style upsert row semantics, BM25
   * scoring against a closed-form fixture, Bloom-prefiltered
   * decontamination equivalence, salted domain rollup equivalence, and
   * stratified-sample determinism.
   */
-class MergeRankingSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class MergeRankingSpec extends AnyFunSuite with SharedSpark {
 
   test("upsert: delta wins whole-row (NULLs preserved), base carries, inserts append") {
     import spark.implicits._

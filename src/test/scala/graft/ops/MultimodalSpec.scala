@@ -2,14 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Real javax.imageio decode path: lossless PNG/BMP roundtrips with
   * closed-form pixel sums, error surfacing for corrupt/empty payloads,
   * and the distributed decodeImage kernel over a mixed media frame.
   */
-class MultimodalSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class MultimodalSpec extends AnyFunSuite with SharedSpark {
 
   /** Closed-form sum of ((seed*31 + 7x + 13y) mod 256) over the image. */
   private def expectedSum(seed: Long, w: Int, h: Int): Long = {

@@ -2,14 +2,13 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 
 /** Training-data ops: planted-duplicate recall for MinHash-LSH and
   * SimHash, LSH-ANN recall vs brute force, multimodal plumbing
   * determinism, native fingerprint expression.
   */
-class OpsSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class OpsSpec extends AnyFunSuite with SharedSpark {
   val sf = "/root/testdata/sf0.001"
 
   def documents = spark.read.parquet(s"$sf/documents.parquet")

@@ -3,8 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class PackingSpec extends AnyFunSuite {
-  private lazy val spark = graft.TestSpark.spark
+class PackingSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

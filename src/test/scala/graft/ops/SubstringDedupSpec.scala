@@ -9,9 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * reference (no hashing) — the fingerprint path must reproduce exact
   * token-sequence semantics.
   */
-class SubstringDedupSpec extends AnyFunSuite {
+class SubstringDedupSpec extends AnyFunSuite with graft.SharedSpark {
 
-  private lazy val spark = graft.TestSpark.spark
 
   private def run(docs: Seq[(Long, String)], k: Int,
       minDocs: Int = 2): Map[Long, (Long, Long)] = {

@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * All-column kernel — the same expressions the oracled
   * `doc_url_canonical` query runs, here against hand-picked edges.
   */
-class UrlsSpec extends AnyFunSuite {
-  private lazy val spark = graft.TestSpark.spark
+class UrlsSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def canon(urls: String*): Seq[Option[String]] = {
     import spark.implicits._

@@ -3,14 +3,13 @@ package graft.streaming
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.TestSpark
+import graft.SharedSpark
 import graft.spark.Page
 
 /** Streaming monitors: watermark-windowed crawl rates and keyed-state
   * first-seen URL dedup, driven through MemoryStream micro-batches.
   */
-class MonitorsSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class MonitorsSpec extends AnyFunSuite with SharedSpark {
 
   private def page(url: String, ts: String): Page =
     Page(url, Timestamp.valueOf(ts), Array.emptyByteArray, "", "en")

@@ -2,14 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.corpus.SyntheticCorpus
 
 /** Incremental ingest: two micro-batches of pages through the streaming
   * pipeline accumulate exactly the triples of the batch pipeline.
   */
-class StreamingSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class StreamingSpec extends AnyFunSuite with SharedSpark {
 
   test("streamed pages produce the same triples as the batch path") {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft.tag
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.spark.SentenceRow
 
 /** Bi-LSTM-CRF forward pass: hand-computed LSTM step fixture (TF
@@ -10,8 +10,7 @@ import graft.spark.SentenceRow
   * char-CNN 'same'-padding fixture, GloVe import round-trip, and the
   * end-to-end broadcast decode.
   */
-class BiLstmSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class BiLstmSpec extends AnyFunSuite with SharedSpark {
 
   private def sig(x: Double) = 1.0 / (1.0 + math.exp(-x))
 

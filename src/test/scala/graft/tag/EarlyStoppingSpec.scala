@@ -1,15 +1,14 @@
 package graft.tag
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.spark.SentenceRow
 
 /** A8 best-F1 early stopping (`models/estimator.py:137-139`): max over
   * epochs, strict-improvement patience, never worse than the initial
   * model.
   */
-class EarlyStoppingSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class EarlyStoppingSpec extends AnyFunSuite with SharedSpark {
 
   test("protocol: keeps the max epoch, stops after patience non-improvements") {
     val f1s = Map(0 -> 0.5, 1 -> 0.7, 2 -> 0.6, 3 -> 0.65, 4 -> 0.9)

@@ -1,7 +1,7 @@
 package graft.tag
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.corpus.RefCorpus
 import graft.io.ConllCodec
 import graft.metrics.SpanMetrics
@@ -12,8 +12,7 @@ import graft.metrics.SpanMetrics
   * orders + self-training paths must run end-to-end and land in sane
   * bands with the expected ordering.
   */
-class HmmOrdersSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class HmmOrdersSpec extends AnyFunSuite with SharedSpark {
 
   test("HMM orders 1-2 with/without self-training: end-to-end bands") {
     import spark.implicits._

@@ -1,7 +1,7 @@
 package graft.tag
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.SharedSpark
 import graft.spark.SentenceRow
 
 /** Self-training at web scale: the (feature-value, label) count table
@@ -9,8 +9,7 @@ import graft.spark.SentenceRow
   * collected to the driver — `minCount` must bound it when the corpus
   * vocabulary is unbounded (css-class cardinality grows with the web).
   */
-class SelfTrainCapSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
+class SelfTrainCapSpec extends AnyFunSuite with SharedSpark {
 
   private def sent(i: Int, css: Seq[String]): SentenceRow = {
     val tkns = css.indices.map(j => s"tok$j")
